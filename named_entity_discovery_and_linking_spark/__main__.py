@@ -23,6 +23,25 @@ import os
 import sys
 
 
+def _load_kb(spark, args):
+    """(kb, aliases) from ``--kb``/``--aliases`` (no aliases if only
+    ``--kb``), or the fixture KB when ``--kb`` is not given."""
+    if not args.kb:
+        from .fixtures.generator import kb_dfs
+
+        return kb_dfs(spark)
+    from .session import local_frame
+    from .sources.kb_tsv import load_aliases_tab, load_entities_tab
+
+    kb = load_entities_tab(spark, args.kb)
+    aliases = (
+        load_aliases_tab(spark, args.aliases)
+        if args.aliases
+        else local_frame(spark, [], "eid string, alias string")
+    )
+    return kb, aliases
+
+
 def main(argv=None):
     ap = argparse.ArgumentParser(prog="named_entity_discovery_and_linking_spark")
     ap.add_argument("--run-csr", dest="run_csr", action="store_true",
@@ -118,19 +137,7 @@ def main(argv=None):
     if args.query or args.map_file:
         from .operators.linking import audit_map_file, query_kb
 
-        if args.kb:
-            from .sources.kb_tsv import load_aliases_tab, load_entities_tab
-
-            kb = load_entities_tab(spark, args.kb)
-            aliases = (
-                load_aliases_tab(spark, args.aliases)
-                if args.aliases
-                else spark.createDataFrame([], "eid string, alias string")
-            )
-        else:
-            from .fixtures.generator import kb_dfs
-
-            kb, aliases = kb_dfs(spark)
+        kb, aliases = _load_kb(spark, args)
         if args.query:
             out = query_kb(spark, kb, aliases, [tuple(q) for q in args.query])
         else:
@@ -164,16 +171,7 @@ def main(argv=None):
             ap.error("--run-csr requires --in-dir")
         from .plans.csr import run_csr
 
-        kb = aliases = None
-        if args.kb:
-            from .sources.kb_tsv import load_aliases_tab, load_entities_tab
-
-            kb = load_entities_tab(spark, args.kb)
-            aliases = (
-                load_aliases_tab(spark, args.aliases)
-                if args.aliases
-                else spark.createDataFrame([], "eid string, alias string")
-            )
+        kb, aliases = _load_kb(spark, args) if args.kb else (None, None)
         n = run_csr(spark, args.in_dir, args.out, args.lang, kb, aliases)
         print(f"done: {n} CSR files -> {args.out}")
         return 0
@@ -216,7 +214,9 @@ def main(argv=None):
         if args.benchmark:
             bench = spark.read.parquet(args.benchmark)
         else:
-            bench = spark.createDataFrame([], "bench_id string, text string")
+            from .session import local_frame
+
+            bench = local_frame(spark, [], "bench_id string, text string")
         flags, curated, report = curate_corpus(
             docs, bench, id_col=id_col, sample_rate=args.sample_rate,
             # pages-shaped input: latest crawl wins the recrawl collapse
@@ -237,19 +237,7 @@ def main(argv=None):
                      "file source watches)")
         from .streaming.stream_mentions import stream_triples
 
-        if args.kb:
-            from .sources.kb_tsv import load_aliases_tab, load_entities_tab
-
-            kb = load_entities_tab(spark, args.kb)
-            aliases = (
-                load_aliases_tab(spark, args.aliases)
-                if args.aliases
-                else spark.createDataFrame([], "eid string, alias string")
-            )
-        else:
-            from .fixtures.generator import kb_dfs
-
-            kb, aliases = kb_dfs(spark)
+        kb, aliases = _load_kb(spark, args)
         stream_triples(
             spark, args.pages, os.path.join(args.out, "triples"),
             os.path.join(args.out, "_stream_checkpoint"), kb, aliases,
@@ -281,19 +269,7 @@ def main(argv=None):
         spark, pages, "mentions", discover_mentions, args.out, lineage_dir, args.buckets
     ).localCheckpoint()
 
-    if args.kb:
-        from .sources.kb_tsv import load_aliases_tab, load_entities_tab
-
-        kb = load_entities_tab(spark, args.kb)
-        aliases = (
-            load_aliases_tab(spark, args.aliases)
-            if args.aliases
-            else spark.createDataFrame([], "eid string, alias string")
-        )
-    else:
-        from .fixtures.generator import kb_dfs
-
-        kb, aliases = kb_dfs(spark)
+    kb, aliases = _load_kb(spark, args)
 
     if args.mentions_json:
         from .sources.json_compat import write_mention_json_dir

@@ -21,6 +21,8 @@ from __future__ import annotations
 import datetime as _dt
 import random
 
+from ..session import local_frame
+
 # ---------------------------------------------------------------- dimension data
 
 # (name, fine ldcOnt id). Invented names; types follow the LDC AIDA ontology
@@ -348,7 +350,8 @@ def pages_df(spark, seed: int = 42, n_pages: int = 200):
             T.StructField("lang", T.StringType()),
         ]
     )
-    return spark.createDataFrame(make_pages(seed, n_pages), schema)
+    # size hidden: the fixture pages stand in for a crawl
+    return local_frame(spark, make_pages(seed, n_pages), schema, hide_size=True)
 
 
 def kb_dfs(spark, seed: int = 42):
@@ -356,21 +359,24 @@ def kb_dfs(spark, seed: int = 42):
     rng = random.Random(seed + 1)
     ents, aliases = _mk_kb(rng)
     # tiny dimension tables: 2 partitions, not default_parallelism — per-task
-    # scheduling overhead dominates otherwise (they get broadcast anyway)
-    e = spark.createDataFrame(
-        ents, "src string, type string, eid string, name string, country string, feature string, wiki string"
+    # scheduling overhead dominates otherwise (they get broadcast anyway);
+    # size hidden: the fixture KB stands in for a real one
+    e = local_frame(
+        spark, ents,
+        "src string, type string, eid string, name string, country string, feature string, wiki string",
+        hide_size=True,
     ).coalesce(2)
-    a = spark.createDataFrame(aliases, "eid string, alias string").coalesce(2)
+    a = local_frame(spark, aliases, "eid string, alias string", hide_size=True).coalesce(2)
     return e, a
 
 
 def ontology_dfs(spark):
     """(ldc_entity_types, nist_key, subtype_hierarchy, wordnet_types)."""
     types = [(t,) + tuple((t.split(":", 1)[1].split(".") + ["n/a", "n/a"])[:3]) for t in LDC_ENTITY_TYPES]
-    ldc = spark.createDataFrame(types, "ont_id string, type string, subtype string, subsubtype string")
-    nist = spark.createDataFrame(list(NIST_KEY.items()), "keyword string, ont_id string")
-    hier = spark.createDataFrame(
-        [(t, s) for t, subs in SUBTYPE_HIERARCHY.items() for s in subs], "type string, subtype string"
+    ldc = local_frame(spark, types, "ont_id string, type string, subtype string, subsubtype string")
+    nist = local_frame(spark, list(NIST_KEY.items()), "keyword string, ont_id string")
+    hier = local_frame(
+        spark, [(t, s) for t, subs in SUBTYPE_HIERARCHY.items() for s in subs], "type string, subtype string"
     )
-    wn = spark.createDataFrame(WORDNET_TYPES, "lemma string, type string, subtype string, subsubtype string")
+    wn = local_frame(spark, WORDNET_TYPES, "lemma string, type string, subtype string, subsubtype string")
     return ldc, nist, hier, wn

@@ -36,7 +36,9 @@ CC_DRIVER_MAX_EDGES = 200_000
 
 def _driver_union_find(pairs):
     """Min-label connected components over (src, dst) pairs on the driver.
-    Returns {node: min_node_in_component}."""
+    Returns {node: min_node_in_component}.  A NULL endpoint is no node: its
+    edge only registers the other endpoint (the distributed loop's NULL
+    join keys never match either)."""
     parent: dict = {}
 
     def find(x):
@@ -48,10 +50,11 @@ def _driver_union_find(pairs):
         return r
 
     for a, b in pairs:
-        if a not in parent:
-            parent[a] = a
-        if b not in parent:
-            parent[b] = b
+        for n in (a, b):
+            if n is not None and n not in parent:
+                parent[n] = n
+        if a is None or b is None:
+            continue
         ra, rb = find(a), find(b)
         if ra != rb:
             # union by MIN id so every root is its component's minimum
@@ -88,22 +91,26 @@ def connected_components(edges: DataFrame, max_rounds: int = MAX_CC_ROUNDS,
     the probe collects at most driver_max_edges + 1 rows, so an oversized
     edge set falls through to the distributed loop without ever
     materializing on the driver.
+
+    Edges are read by column name, in any column order.  A NULL endpoint
+    is no node: both paths label the edge's other endpoint (alone, if it
+    has no other edge) and never return a NULL ``mid``.
     """
+    edges = edges.select("src", "dst")
     if driver_max_edges is not None:
         probe = edges.limit(driver_max_edges + 1).collect()
         if len(probe) <= driver_max_edges:
-            spark = edges.sparkSession
-            comp = _driver_union_find((r[0], r[1]) for r in probe)
-            src_type = edges.schema[0].dataType
             from pyspark.sql.types import StructField, StructType
 
+            from ..session import local_frame
+
+            comp = _driver_union_find((r["src"], r["dst"]) for r in probe)
+            src_type = edges.schema["src"].dataType
             schema = StructType([
                 StructField("mid", src_type, True),
                 StructField("cluster_id", src_type, True),
             ])
-            return spark.createDataFrame(
-                sorted(comp.items()), schema
-            )
+            return local_frame(edges.sparkSession, sorted(comp.items()), schema)
     sym = (
         edges.unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
@@ -112,6 +119,7 @@ def connected_components(edges: DataFrame, max_rounds: int = MAX_CC_ROUNDS,
     labels = (
         sym.select(F.col("src").alias("mid"))
         .union(sym.select(F.col("dst").alias("mid")))
+        .filter(F.col("mid").isNotNull())
         .distinct()
         .withColumn("label", F.col("mid"))
         .localCheckpoint(eager=False)

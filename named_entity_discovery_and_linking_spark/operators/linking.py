@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.editdist import dl_distance_udf
+from ..session import local_frame
 
 TOP_K_CANDIDATES = 100  # linking.py:112
 TMPKB_PROMOTE_MIN = 5  # linking.py:473-475
@@ -541,8 +542,8 @@ def disambiguate(scored: DataFrame, queries: DataFrame | None = None) -> DataFra
 
 def tmpkb_seed(spark) -> DataFrame:
     """The reference pre-registers MH17 and T-34 (linking.py:351-352)."""
-    return spark.createDataFrame(
-        [("MH17", "VEH"), ("T-34", "VEH")], "name string, type string"
+    return local_frame(
+        spark, [("MH17", "VEH"), ("T-34", "VEH")], "name string, type string"
     ).withColumn("tmp_eid", _tmp_eid())
 
 
@@ -714,8 +715,8 @@ def query_kb(spark, kb: DataFrame, aliases: DataFrame, queries: list,
          typ if typ.startswith("ldcOnt:") else "ldcOnt:" + typ, context)
         for i, (name, typ) in enumerate(queries)
     ]
-    mentions = spark.createDataFrame(
-        rows,
+    mentions = local_frame(
+        spark, rows,
         "url string, mid string, category string, mention string, "
         "type string, sent_text string",
     )
@@ -759,15 +760,15 @@ def audit_map_file(spark, kb: DataFrame, aliases: DataFrame, path: str) -> DataF
                 continue
             pairs.append((row[1][1:], row[2][1:]))
     if not pairs:
-        return spark.createDataFrame(
-            [], "q_name string, concept string, eid string, cname string, "
+        return local_frame(
+            spark, [], "q_name string, concept string, eid string, cname string, "
                 "confidence double, rank int, country string, feature string, wiki string")
     # query each DISTINCT name once: duplicate names in the file would
     # otherwise create duplicate query mids and the q_name join below would
     # cross-multiply candidate sets (2 mids x 2 concept rows = 4 copies)
     names = sorted({n for n, _ in pairs})
     result = query_kb(spark, kb, aliases, [(n, enttype) for n in names])
-    concepts = spark.createDataFrame(pairs, "q_name string, concept string")
+    concepts = local_frame(spark, pairs, "q_name string, concept string")
     # left join FROM concepts: every map row appears even when no candidate
     # matched (the broadcast hint belongs on the joined side — on the
     # preserved side of an outer join Spark ignores it)
@@ -786,12 +787,12 @@ def query_tmpkb(spark, queries: list, tmpkb: DataFrame | None = None) -> DataFra
     tmpkb = tmpkb if tmpkb is not None else tmpkb_seed(spark)
     rows = [(f"query://{i}", f"q{i}", name.lower(), typ, [""])
             for i, (name, typ) in enumerate(queries)]
-    nil_queries = spark.createDataFrame(
-        rows, "url string, mid string, ent_name string, ent_type string, "
+    nil_queries = local_frame(
+        spark, rows, "url string, mid string, ent_name string, ent_type string, "
               "ctx_tokens array<string>",
     )
-    names = spark.createDataFrame(
-        [(f"q{i}", n, t) for i, (n, t) in enumerate(queries)],
+    names = local_frame(
+        spark, [(f"q{i}", n, t) for i, (n, t) in enumerate(queries)],
         "mid string, q_name string, q_type string",
     )
     return (

@@ -42,6 +42,7 @@ from ..functions.textnorm import (
     split_sentences,
     tokenize_with_offsets,
 )
+from ..session import local_frame
 
 MENTION_SCHEMA = (
     "url string, sid int, mid string, category string, mention string, "
@@ -176,8 +177,8 @@ def normalize_types_df(df: DataFrame, ont_ids: list) -> DataFrame:
     if not ont_ids:  # empty ontology: the reference's loop never executes
         return df.withColumn("ont", F.col("etype"))
     spark = df.sparkSession
-    ont = spark.createDataFrame(
-        [(i, o, o.lower()) for i, o in enumerate(ont_ids)], "idx int, ont string, low string"
+    ont = local_frame(
+        spark, [(i, o, o.lower()) for i, o in enumerate(ont_ids)], "idx int, ont string, low string"
     )
     t = F.lower(F.col("etype"))
     st = F.concat(F.lit("."), F.lower(F.coalesce(F.nullif(F.col("subtype"), F.lit("")), F.lit("n/a"))))

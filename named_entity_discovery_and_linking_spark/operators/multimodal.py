@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 MEDIA_SCHEMA = (
     "media_id string, kind string, payload binary, "
     "meta struct<width:int, height:int, sample_rate:int, duration_ms:int, codec:string>"
@@ -136,4 +138,4 @@ def media_fixture(spark, n: int = 20) -> DataFrame:
             "codec": {"image": "png", "audio": "pcm", "video": "h264"}[kind],
         }
         rows.append((f"m{i:04d}", kind, payload, meta))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA).coalesce(2)
+    return local_frame(spark, rows, MEDIA_SCHEMA).coalesce(2)

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash
+from ..session import local_frame
 
 
 def _np_iter_cos_vs_queries(emb_iter, q_ids, Q, id_name, skip_self: bool):
@@ -532,8 +533,8 @@ def ivf_topk(emb: DataFrame, query_ids: list, k: int = 3, n_cells: int | None = 
     itself is the NumPy Arrow kernel (see ivf_assign)."""
     cents_df = ivf_centroids(emb, n_cells, id_col, vec_col)
     cells_np, C_np = _collect_centroids(cents_df)
-    cents = emb.sparkSession.createDataFrame(
-        [(int(c), [float(x) for x in v]) for c, v in zip(cells_np, C_np)],
+    cents = local_frame(
+        emb.sparkSession, [(int(c), [float(x) for x in v]) for c, v in zip(cells_np, C_np)],
         "cell int, centroid array<double>",
     )
     inv = ivf_assign(emb, cents, id_col, vec_col)

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from ..operators.canonicalize import cluster_link_vote, elect_best_mention
 from ..operators.enrich import merge_fringe_links
 from ..operators.linking import link_mentions
+from ..session import local_frame
 
 LANGS = ("en", "ru", "uk", "img")
 COMPONENT = "opera.entities.edl.refkb.xianyang"
@@ -289,7 +290,11 @@ def run_csr(spark, in_dir: str, out_dir: str, lang: str, kb=None, aliases=None,
     # one row per document: (doc, [xref structs]); files with no links join
     # in with an empty list so every input file is rewritten
     per_doc = linked.groupBy("doc").agg(F.collect_list(_xref_struct()).alias("xrefs"))
-    all_docs = spark.createDataFrame([(f,) for f in fnames], "doc string")
+    # spread the per-file rewrites over the cores (a local frame is one
+    # partition)
+    all_docs = local_frame(spark, [(f,) for f in fnames], "doc string").repartition(
+        max(1, min(len(fnames), spark.sparkContext.defaultParallelism))
+    )
     work = all_docs.join(per_doc, "doc", "left")
 
     def write_partition(rows):

@@ -29,6 +29,7 @@ from ..operators import similarity as S
 from ..operators import textstats as T
 from ..operators import webcure as W
 from ..operators.textstats import LANG_PROFILES
+from ..session import local_frame
 
 # --------------------------------------------------------------- helpers
 
@@ -131,8 +132,8 @@ def q_link_score_rule(spark, sf_dir):
     KB, via the real generate_candidates/score_candidates operators."""
     from ..operators.linking import generate_candidates, score_candidates
 
-    kb = spark.createDataFrame(
-        KB_ROWS, "eid string, name string, type string, country string, feature string, wiki string"
+    kb = local_frame(
+        spark, KB_ROWS, "eid string, name string, type string, country string, feature string, wiki string"
     )
     alias_table = (
         kb.select(
@@ -565,7 +566,7 @@ def q_gazetteer_vote(spark, sf_dir):
     from ..operators.enrich import gazetteer_substring_vote
 
     m = _tokens(spark, sf_dir).select(F.col("word").alias("mid"), F.col("word").alias("mention")).distinct()
-    gaz = spark.createDataFrame(GAZ_SUBSTRINGS, "name string, fine_type string")
+    gaz = local_frame(spark, GAZ_SUBSTRINGS, "name string, fine_type string")
     return gazetteer_substring_vote(m, gaz)
 
 
@@ -686,8 +687,8 @@ def q_subtype_attach(spark, sf_dir):
             F.array(*[F.lit(s) for s in J5_SUBTYPES]), (F.col("pos") % 4 + 1).cast("int")
         ).alias("subtype"),
     )
-    hier = spark.createDataFrame(
-        [(t, s) for t, subs in SUBTYPE_HIERARCHY.items() for s in subs],
+    hier = local_frame(
+        spark, [(t, s) for t, subs in SUBTYPE_HIERARCHY.items() for s in subs],
         "type string, subtype string",
     )
     return attach_subtypes(mentions, spans, hier).select("mid", "coarse_type", "subtype")
@@ -1964,8 +1965,8 @@ def q_nist_key(spark, sf_dir):
     from ..fixtures.generator import LDC_ENTITY_TYPES
     from ..sources.ontology import NIST_KEY_SUBTYPES
 
-    ids = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(LDC_ENTITY_TYPES)], "pos int, ont_id string"
+    ids = local_frame(
+        spark, [(i, s) for i, s in enumerate(LDC_ENTITY_TYPES)], "pos int, ont_id string"
     )
     parts = ids.withColumn("p", F.split(F.expr("split(ont_id, ':')[1]"), "\\."))
     sub_occ = parts.filter(F.size("p").isin(2, 3)).select(
@@ -1994,7 +1995,8 @@ def q_nist_key(spark, sf_dir):
         .filter(F.col("rn") == 1)
         .select("keyword", "ont_id")
     )
-    overrides = spark.createDataFrame(
+    overrides = local_frame(
+        spark,
         [("force", "ldcOnt:PER.MilitaryPersonnel"),
          ("forces", "ldcOnt:PER.MilitaryPersonnel"),
          ("soldiers", "ldcOnt:PER.MilitaryPersonnel")],

@@ -21,12 +21,15 @@ reference's only resume state was the tmp-KB counter file
 
 from __future__ import annotations
 
+import json
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from ..session import local_frame
 from ..sources.fs import get_filesystem
 from ..sources.io import bucketize, write_table
 
@@ -36,14 +39,14 @@ LINEAGE_SCHEMA = "bucket int, stage string, status string, n_rows long, run_id s
 def read_lineage(spark: SparkSession, lineage_dir: str) -> DataFrame:
     fs = get_filesystem(lineage_dir)
     if not fs.exists(lineage_dir):
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
+        return local_frame(spark, [], LINEAGE_SCHEMA)
     try:
         # explicit schema: inference would take the first part-file's
         # physical types, which breaks if a foreign writer ever lands a
         # wider column; the lineage contract is exactly LINEAGE_SCHEMA
         return spark.read.schema(LINEAGE_SCHEMA).parquet(fs.spark_path(lineage_dir))
     except Exception:
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
+        return local_frame(spark, [], LINEAGE_SCHEMA)
 
 
 def completed_buckets(spark: SparkSession, lineage_dir: str, stage: str) -> list[int]:
@@ -60,7 +63,7 @@ def mark_done(spark: SparkSession, lineage_dir: str, stage: str,
     rows = [(b, stage, "done", int(n), run_id) for b, n in bucket_counts.items()]
     if rows:
         target = get_filesystem(lineage_dir).spark_path(lineage_dir)
-        spark.createDataFrame(rows, LINEAGE_SCHEMA).coalesce(1).write.mode("append").parquet(target)
+        local_frame(spark, rows, LINEAGE_SCHEMA).coalesce(1).write.mode("append").parquet(target)
 
 
 def _acquire_claim(lineage_dir: str, stage: str, run_id: str,
@@ -174,6 +177,8 @@ def run_stage(
     out_fs = get_filesystem(out_dir)
     out_path = out_fs.join(out_dir, stage)
     claim, claim_fs = _acquire_claim(lineage_dir, stage, run_id, claim_ttl, claim_timeout)
+    # the stage's output schema, recorded with its lineage
+    schema_file = claim_fs.join(lineage_dir, f"_schema_{stage}.json")
     hb_thread, hb_stop = _claim_heartbeat(claim_fs, claim, run_id, claim_ttl)
     t0 = time.time()
     try:
@@ -181,12 +186,16 @@ def run_stage(
         # claim first may have completed buckets while we polled
         done = set(completed_buckets(spark, lineage_dir, stage))
         pending = bucketed.filter(~F.col("bucket").isin(list(done)) if done else F.lit(True))
-        if pending.limit(1).count() > 0:
+        # a first run always runs the transform (no probe job); an empty
+        # input then writes an empty table and marks no bucket
+        if not done or pending.limit(1).count() > 0:
             result = transform(pending)
             if "bucket" not in result.columns:
                 result = bucketize(result, "url", n_buckets)
+            schema = result.schema
             write_table(result, out_fs.spark_path(out_path),
                         partition_by=["bucket"], mode="overwrite")
+            claim_fs.write_atomic(schema_file, schema.json())
             pending_ids = {r["bucket"] for r in pending.select("bucket").distinct().collect()}
             # count from the written files (explicit schema: no inference
             # job, and robust to an all-empty write); bucket is the
@@ -208,6 +217,8 @@ def run_stage(
                 extra={"resumed_buckets": len(done)},
             )
         else:
+            text = claim_fs.read_text(schema_file)
+            schema = StructType.fromJson(json.loads(text)) if text else None
             # fully-resumed invocation: zero pending work is itself a metric
             write_stage_metrics(
                 lineage_dir, run_id, stage, wall_s=time.time() - t0,
@@ -217,5 +228,10 @@ def run_stage(
         hb_stop.set()
         hb_thread.join(timeout=5.0)
         _release_claim(claim_fs, claim, run_id)
-    return (spark.read.parquet(out_fs.spark_path(out_path))
-            if out_fs.exists(out_path) else bucketed.limit(0))
+    # read back with the stage's schema, not inference: a stage whose every
+    # bucket came out empty wrote no data file to infer from (lineage from
+    # before schema records has none: infer, as it always did)
+    if out_fs.exists(out_path):
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(out_fs.spark_path(out_path))
+    return bucketed.limit(0) if schema is None else local_frame(spark, [], schema)

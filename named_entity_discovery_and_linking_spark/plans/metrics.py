@@ -29,6 +29,7 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources.fs import get_filesystem
 
 METRICS_SUBDIR = "_metrics"
@@ -151,7 +152,7 @@ def read_metrics(spark: SparkSession, lineage_dir: str) -> DataFrame:
     fs = get_filesystem(lineage_dir)
     mdir = fs.join(lineage_dir, METRICS_SUBDIR)
     if not fs.exists(mdir):
-        return spark.createDataFrame([], METRICS_SCHEMA)
+        return local_frame(spark, [], METRICS_SCHEMA)
     rows = []
     for fn in sorted(fs.listdir(mdir)):
         if not fn.endswith(".json"):
@@ -168,4 +169,4 @@ def read_metrics(spark: SparkSession, lineage_dir: str) -> DataFrame:
             ))
         except (ValueError, TypeError, AttributeError):
             continue  # torn/foreign/ill-typed file: skip, never fail the reader
-    return spark.createDataFrame(rows, METRICS_SCHEMA)
+    return local_frame(spark, rows, METRICS_SCHEMA)

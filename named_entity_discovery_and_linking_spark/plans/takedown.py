@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from ..session import local_frame
 from ..sources.fs import get_filesystem
 
 # tables rewritten by url; nodes handled separately (GC pass).  Tables
@@ -145,7 +146,7 @@ def takedown_urls(spark: SparkSession, out_dir: str, urls: list[str] | DataFrame
     fs = get_filesystem(out_dir)
     urls_df = (
         urls.select("url") if isinstance(urls, DataFrame)
-        else spark.createDataFrame([(u,) for u in urls], "url string")
+        else local_frame(spark, [(u,) for u in urls], "url string")
     ).distinct().localCheckpoint()
     if urls_df.limit(1).count() == 0:
         return {}

@@ -29,6 +29,8 @@ from urllib.parse import unquote
 
 import pandas as pd
 
+from ..session import local_frame
+
 ENTITY_SCHEMA = (
     "doc string, frame_id string, text string, label string, enttype string, "
     "sent_ref string, fringe string, form string"
@@ -76,7 +78,7 @@ def read_csr_dir(spark, in_dir: str):
         if f.endswith(".csr.json")
     ]
     if not paths:  # spark.read.text([]) raises; an empty corpus is not an error
-        empty = lambda s: spark.createDataFrame([], s)  # noqa: E731
+        empty = lambda s: local_frame(spark, [], s)  # noqa: E731
         return empty(ENTITY_SCHEMA), empty(SENTENCE_SCHEMA), empty(CLUSTER_SCHEMA)
     raw = spark.read.text(paths, wholetext=True).selectExpr(
         "input_file_name() AS path", "value"

@@ -28,6 +28,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..session import local_frame
+
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 MAX_CHAR = 10000  # document.py:203-204
 MAX_SENTS = 200
@@ -106,7 +108,7 @@ def ltf_dir_to_pages(spark, in_dir: str, suffix: str = ".ltf.xml") -> DataFrame:
     paths = sorted(
         os.path.join(in_dir, f) for f in os.listdir(in_dir) if f.endswith(suffix)
     )
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
+    pdf = local_frame(spark, [(p,) for p in paths], "path string").repartition(
         max(1, min(len(paths), spark.sparkContext.defaultParallelism))
     )
 

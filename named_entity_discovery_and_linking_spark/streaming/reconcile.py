@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.canonicalize import connected_components
+from ..session import local_frame
 from ..sources.fs import get_filesystem
 from ..sources.io import write_table
 
@@ -94,7 +95,7 @@ def _read_state(spark: SparkSession, state_dir: str, version: int):
     out = {}
     for name, ddl in _STATE_TABLES.items():
         if version == 0:
-            out[name] = spark.createDataFrame([], ddl)
+            out[name] = local_frame(spark, [], ddl)
         else:
             path = fs.join(_state_root(state_dir), f"v={version}", name)
             out[name] = spark.read.schema(ddl).parquet(fs.spark_path(path))
@@ -368,8 +369,8 @@ def reconcile_triples_incremental(
     n_changed = changed_groups.count()
     state_out = dict(merged)
     state_out["assign"] = assign
-    state_out["done"] = spark.createDataFrame(
-        [(int(b),) for b in sorted(on_disk)], _STATE_TABLES["done"])
+    state_out["done"] = local_frame(
+        spark, [(int(b),) for b in sorted(on_disk)], _STATE_TABLES["done"])
     _persist_state(state_out, state_dir, version + 1)
     stats = {
         "new_batches": new_batches,

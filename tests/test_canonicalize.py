@@ -20,6 +20,22 @@ def test_connected_components_chain(spark):
     assert cc["a"] != cc["x"]
 
 
+def test_connected_components_null_endpoints_and_column_order(spark):
+    """Edges are read by name (an extra leading column, dst before src) and
+    a NULL endpoint is no node; the driver union-find and the distributed
+    loop agree."""
+    edges = spark.createDataFrame(
+        [(1.0, "b", "a"), (0.5, "c", "b"), (1.0, None, "x"), (1.0, "y", None),
+         (1.0, None, None), (0.2, "q", "p")],
+        "w double, dst string, src string",
+    )
+    want = {"a": "a", "b": "a", "c": "a", "x": "x", "y": "y", "p": "p", "q": "p"}
+    for cap in (200_000, None):  # driver union-find, then the distributed loop
+        out = connected_components(edges, driver_max_edges=cap)
+        assert out.columns == ["mid", "cluster_id"]
+        assert {r["mid"]: r["cluster_id"] for r in out.collect()} == want, cap
+
+
 def test_cluster_vote_argmax(spark):
     clusters = spark.createDataFrame(
         [("m1", "c1"), ("m2", "c1"), ("m3", "c1")], "mid string, cluster_id string"

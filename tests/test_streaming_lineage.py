@@ -94,6 +94,50 @@ def test_lineage_rerun_is_noop(spark, tmp_path):
     assert rows1 == rows2  # nothing recomputed, nothing re-marked
 
 
+def test_run_stage_empty_output_keeps_schema_and_resumes(spark, tmp_path):
+    """A stage whose transform yields no rows wrote no data file: the read
+    back takes the transform's schema (no inference), its buckets are
+    marked done, and the fully-resumed rerun returns the same columns."""
+    pages = spark.createDataFrame(
+        [("https://a.example/1", "x"), ("https://b.example/2", "y")], "url string, text string"
+    )
+
+    def stage(p):
+        return p.filter("false").select("url", F.length("text").alias("n_chars"))
+
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+    first = run_stage(spark, pages, "empty", stage, out, lin, n_buckets=4)
+    assert first.columns == ["url", "n_chars", "bucket"]
+    assert first.count() == 0
+    from named_entity_discovery_and_linking_spark.sources.io import bucketize
+
+    want = {r["bucket"] for r in bucketize(pages, "url", 4).collect()}
+    assert set(completed_buckets(spark, lin, "empty")) == want
+    assert read_lineage(spark, lin).agg(F.sum("n_rows")).first()[0] == 0
+
+    rerun = run_stage(spark, pages, "empty", stage, out, lin, n_buckets=4)
+    assert rerun.schema == first.schema and rerun.count() == 0
+    assert read_lineage(spark, lin).count() == len(want)  # nothing re-marked
+
+    # no input rows at all: still the stage's columns, no bucket marked
+    none = run_stage(spark, pages.limit(0), "empty", stage,
+                     str(tmp_path / "out0"), str(tmp_path / "lin0"), n_buckets=4)
+    assert none.schema == first.schema and none.count() == 0
+    assert completed_buckets(spark, str(tmp_path / "lin0"), "empty") == []
+
+
+def test_run_stage_schema_matches_inferred_read(spark, tmp_path):
+    """The explicit-schema read back returns what schema inference over the
+    written files returns: same columns in the same order (the partition
+    column last), same types, same rows."""
+    pages = pages_df(spark, n_pages=10)
+    out = str(tmp_path / "out")
+    got = run_stage(spark, pages, "mentions", _discover, out, str(tmp_path / "lin"), n_buckets=4)
+    inferred = spark.read.parquet(os.path.join(out, "mentions"))
+    assert got.schema == inferred.schema
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, inferred.collect()))
+
+
 def test_run_stage_no_object_cache(spark, tmp_path):
     """Judge r3 next-round #6: the stage output must not pass through the
     JVM object store (localCheckpoint's MEMORY_AND_DISK) — the partitioned
